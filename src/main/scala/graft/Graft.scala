@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
 import graft.operators.Closure
+import graft.plans.GraftPlanner
 
 /** Library façade — the operations a pkg2 user runs today, as one object
   * (`/root/reference/README.md:1`: search, browse, latest-version, reverse
@@ -25,8 +26,7 @@ object Graft {
     * fired/bailed-with-reason per planned shape. Read with
     * [[ruleDiagnostics]]; recording is per-session and off by default. */
   def enableRuleDiagnostics(spark: SparkSession): Unit = {
-    graft.plans.SketchStats.ensure(spark)
-    graft.plans.RangeJoinRewrite.ensure(spark)
+    GraftPlanner.install(spark, GraftPlanner.Sketch, GraftPlanner.RangeJoin)
     spark.conf.set(graft.plans.RuleDiag.EnabledKey, "true")
   }
 
@@ -457,7 +457,7 @@ object Graft {
   def asofJoin(left: DataFrame, right: DataFrame, leftKey: String, rightKey: String,
       leftTime: String, rightTime: String): DataFrame = {
     val spark = left.sparkSession
-    plans.AsOfJoinStrategy.ensure(spark)
+    GraftPlanner.install(spark, GraftPlanner.AsOf)
     require((left.columns.toSet & right.columns.toSet).isEmpty,
       "as-of join output would carry duplicate column names — rename first")
     // re-alias the right side so self-derived inputs (both sides filtered

@@ -47,20 +47,11 @@ object ScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val src = GraftSession.sfDir
+    val cpus = GraftSession.cores
     val k = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", s"/tmp/graft_scale_K$k")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create()
     val marker = new java.io.File(scaleDir, "_SCALE_COMPLETE")
     if (!marker.exists()) {
       val offsets = Map(
@@ -120,7 +111,7 @@ object ScaleBench {
           .map(l => l.substring(l.indexOf("\"cpus\":") + 7).takeWhile(_.isDigit) -> l)
           .toMap
       else Map.empty
-    val merged = (prev + (cpus -> line)).toSeq.sortBy(_._1.toInt).map(_._2)
+    val merged = (prev + (cpus.toString -> line)).toSeq.sortBy(_._1.toInt).map(_._2)
     java.nio.file.Files.write(p, (merged.mkString("\n") + "\n").getBytes("UTF-8"))
     spark.stop()
   }

@@ -1,11 +1,7 @@
 package graft
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .appName("graft-smoke").getOrCreate()
+    val spark = GraftSession.create()
     val n = SparkEntry.entry(spark).count()
     println(s"SMOKE rows=$n")
     spark.stop()

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -54,22 +53,14 @@ case class AsOfJoin(
 }
 
 /** Plans [[AsOfJoin]] to [[AsOfJoinExec]]. Injected session-wide via
-  * `GraftExtensions` (spark.sql.extensions) or per-session via [[ensure]].
+  * `GraftExtensions` (spark.sql.extensions) or per-session via
+  * [[GraftPlanner]].
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoin(l, r, lk, rk, lt, rt) =>
       AsOfJoinExec(planLater(l), planLater(r), lk, rk, lt, rt) :: Nil
     case _ => Nil
-  }
-
-  /** Idempotent per-session registration (mirror of
-    * GraftFunctions.ensureRegistered for the planner surface).
-    */
-  def ensure(spark: SparkSession): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraStrategies.contains(AsOfJoinStrategy))
-      exp.extraStrategies = AsOfJoinStrategy +: exp.extraStrategies
   }
 }
 

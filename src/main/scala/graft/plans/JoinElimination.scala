@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, EqualTo}
 import org.apache.spark.sql.catalyst.plans.LeftOuter
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, Project}
@@ -24,26 +23,19 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *   - no right references: output columns are untouched.
   * All three conditions are checked structurally; anything else bails.
   *
-  * Installed via `spark.experimental.extraOptimizations` (runtime twin of
-  * `SparkSessionExtensions.injectOptimizerRule`) — it runs after the main
-  * optimizer batches, i.e. after `ReplaceDistinctWithAggregate` has
-  * normalized `Distinct` into the `Aggregate` shape matched here.
+  * Installed by [[GraftPlanner]] as an extra optimization — it runs after
+  * the main optimizer batches, i.e. after `ReplaceDistinctWithAggregate`
+  * has normalized `Distinct` into the `Aggregate` shape matched here.
   *
-  * Measured on Spark 4.1 (round 16): the NATIVE optimizer already
-  * eliminates the common instances of this shape before
-  * extraOptimizations run (the q212 plan loses its join with this rule
-  * uninstalled), so in practice this rule is a backstop for shapes the
-  * built-in pass misses — and its diagnostics value is the NEAR-MISS
-  * record: `right-side-referenced` names the one reason a "just in case"
-  * join survived, which no native rule reports.
+  * On Spark 4.1 the NATIVE optimizer already eliminates the common
+  * instances of this shape before extraOptimizations run (the q212 plan
+  * loses its join with this rule uninstalled), so in practice this rule
+  * is a backstop for shapes the built-in pass misses — and its
+  * diagnostics value is the NEAR-MISS record: `right-side-referenced`
+  * names the one reason a "just in case" join survived, which no native
+  * rule reports.
   */
 object JoinElimination {
-  def ensure(spark: SparkSession): Unit = synchronized {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.exists(_.isInstanceOf[EliminateDistinctKeyLeftJoin]))
-      spark.experimental.extraOptimizations = cur :+ EliminateDistinctKeyLeftJoin()
-  }
-
   final case class EliminateDistinctKeyLeftJoin() extends Rule[LogicalPlan] {
     /** The right side's output attribute when the plan is distinct on its
       * single column: Aggregate(g, g, _) possibly under an attribute-only

@@ -75,12 +75,6 @@ object RangeJoinRewrite {
   /** Explicit off-switch (the old `WidthKey = 0` disable still works). */
   val EnabledKey = "spark.graft.rangeJoin.enabled"
 
-  def ensure(spark: SparkSession): Unit = synchronized {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.exists(_.isInstanceOf[BucketRangeJoin]))
-      spark.experimental.extraOptimizations = cur :+ BucketRangeJoin()
-  }
-
   /** (medianSpan, maxSpan) of the interval side, memoized by the canonical
     * hashes of the child plan AND both bound expressions (ADVICE r11: two
     * range joins sharing an interval child but different bound columns must

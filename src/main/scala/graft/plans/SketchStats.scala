@@ -38,14 +38,6 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 object SketchStats {
   val DirKey: String = StatsCatalog.DirKey
 
-  def ensure(spark: SparkSession): Unit = synchronized {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.exists(_.isInstanceOf[BroadcastFromSketchStats]))
-      spark.experimental.extraOptimizations =
-        cur :+ ReorderJoinsFromNdv() :+ BroadcastFromSketchStats() :+
-          VetoBroadcastOnFanout() :+ PushPartialAggThroughJoin()
-  }
-
   /** Generation-pinned, failure-transparent, re-entrancy-guarded read of
     * the persisted NDV table — all three disciplines live in
     * [[StatsCatalog]] now (VERDICT r11 items 3/4); the stats table itself

@@ -32,9 +32,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *   - rewritten outputs keep the original exprIds, so parent operators
   *     resolve untouched.
   *
-  * Registered per (session, base-path suffix); `ensure` installs the rule
-  * through `spark.experimental.extraOptimizations` (the runtime-injection
-  * twin of `SparkSessionExtensions.injectOptimizerRule`).
+  * Registered per (session, base-path suffix); registering installs the
+  * rule through [[GraftPlanner]].
   */
 object SummaryRouting {
   final case class Summary(groupCols: Seq[String], plan: LogicalPlan,
@@ -53,20 +52,13 @@ object SummaryRouting {
     require((groupCols ++ countCol ++ sums.values).forall(out.contains),
       s"summary is missing columns: ${(groupCols ++ countCol ++ sums.values).filterNot(out.contains).mkString(",")}")
     reg.put((spark, basePathSuffix), Summary(groupCols, summary.queryExecution.analyzed, countCol, sums))
-    ensure(spark)
+    GraftPlanner.install(spark, GraftPlanner.Summary)
   }
 
   /** Drop every registration for the session (tests; bounded sessions). */
   def clear(spark: SparkSession): Unit = {
     reg.keySet.removeIf(_._1 eq spark)
     ()
-  }
-
-  /** Install the rule on the session once. */
-  def ensure(spark: SparkSession): Unit = synchronized {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.exists(_.isInstanceOf[RouteToSummary]))
-      spark.experimental.extraOptimizations = cur :+ RouteToSummary(spark)
   }
 
   final case class RouteToSummary(spark: SparkSession) extends Rule[LogicalPlan] {

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** Round-9 additions (SURVEY.md §2 annex): a deterministic mergeable HLL
   * sketch judged register-for-register, row-pattern recognition over event
@@ -105,7 +104,6 @@ object Advanced {
     // quantized search (64x smaller than float32); the scan stays
     // broadcast-NLJ shaped like q45/q137 with the query side tiny.
     "q232_bq_hamming" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       val packed = Vectors.vecsFor(s, dir).withColumn("word", expr(
         """aggregate(sequence(1, 64), cast(0 as bigint),
            (a, i) -> a + if(element_at(v, i) >= cast(0.0 as double),
@@ -668,7 +666,6 @@ object Advanced {
     // the q217 discipline applied to data generation). The anchors side
     // is tiny and broadcast; the scan is the q45 labeled-NLJ shape.
     "q251_contrastive_triplets" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       val base = Vectors.vecsFor(s, dir)
       val anchors = broadcast(base.filter(col("vec_id") < 20)
         .select(col("vec_id").as("aid"), col("label").as("albl"),

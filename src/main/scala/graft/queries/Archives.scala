@@ -32,7 +32,6 @@ object Archives {
 
   val queries: Seq[(String, QFn)] = Seq(
     "q82_archive_roundtrip" -> { (s, dir) =>
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val packed = Tables.documents(s, dir)
         .select(col("doc_id"), col("text"))
         .withColumn("names", array(
@@ -77,7 +76,6 @@ object Archives {
     // builder backfills), so the oracle re-derives every judged number
     // from the text side without decoding a byte of zip.
     "q222_zip_roundtrip" -> { (s, dir) =>
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val packed = Tables.documents(s, dir)
         .select(col("doc_id"), col("text"))
         .withColumn("names", array(
@@ -117,7 +115,6 @@ object Archives {
     // state; one corrupt index member degrades to SQL null, not a failed
     // job.
     "q91_arch_db_roundtrip" -> { (s, dir) =>
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val packed = Tables.packages(s, dir)
         .withColumn("member", concat(col("name"), lit("-"), col("version"), lit("/desc")))
         .withColumn("desc", concat(

@@ -199,7 +199,6 @@ object Dedup {
     // 100 TB the duplicated-gram side is small (dups are rare), so it
     // broadcasts or bloom-prunes.
     "q154_substring_spans" -> { (s, dir) =>
-      _root_.graft.functions.GraftFunctions.ensureRegistered(s)
       val k = 8
       val grams = Tables.documents(s, dir)
         .select(col("doc_id"), size(split(col("text"), " ")).as("n_tok"),

@@ -55,7 +55,6 @@ object Extras {
       // arithmetic — an independent derivation of the same function, so
       // the kernel itself is judged (ExpressionsSpec additionally pins it
       // against an in-test bit-walk reference and grid bijectivity)
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val keyed = base
         .withColumn("hd", call_function("hilbert_d2", col("a"), col("b"), lit(8)))
         .withColumn("z", graft.Graft.zorder(col("a"), col("b")))
@@ -417,7 +416,7 @@ object Extras {
         .agg(sum(expr("cast(round(o_totalprice * 100) as long)")).as("spend_cents"),
           count(lit(1)).as("n_orders"))
       // ONE implementation — the facade's skyline2d — so the judged query
-      // and the library API cannot drift (SkylineSpec property-tests it)
+      // and the library API cannot drift (Round9Spec property-tests it)
       _root_.graft.Graft.skyline2d(spend, "spend_cents", "n_orders")
         .select(col("o_custkey"), col("spend_cents"), col("n_orders"))
         .orderBy("o_custkey")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
+import graft.plans.GraftPlanner
 
 /** Graph/text mining + time-series operators added in round 9 (SURVEY.md §2
   * annex): triangle counting with degree orientation, log-free fixed-point
@@ -94,8 +95,8 @@ object Mining {
     // the soundness negatives (non-distinct right / referenced right
     // column) keep their joins. At 100 TB the eliminated join is a full
     // fact-table shuffle that never runs.
-    "q212_join_elimination" -> { (s, dir) =>
-      graft.plans.JoinElimination.ensure(s)
+    "q212_join_elimination" -> { (s0, dir) =>
+      val s = GraftPlanner.session(s0, GraftPlanner.JoinElim)
       val li = Tables.lineitem(s, dir)
       val dim = Tables.orders(s, dir).select(col("o_orderkey")).distinct()
       li.join(dim, li("l_orderkey") === dim("o_orderkey"), "left")
@@ -230,8 +231,7 @@ object Mining {
     // broadcast disabled this plans a shuffled equi-join, never a
     // nested-loop — the naive form without the rule is the negative.
     "q267_range_join_rewrite" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.RangeJoinRewrite.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.RangeJoin)
       // NO manual width (r11, VERDICT r10 item 2): the rule derives W from
       // the interval side's span distribution via its planning-time probe
       // (median span → a typical window covers ≤ 2 buckets) and the
@@ -263,8 +263,7 @@ object Mining {
     // Hash-matches the same oracle as q216/q267; RangeJoinRewriteSpec
     // pins that the rewrite actually fired on both timestamp forms.
     "q272_range_join_timestamps" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.RangeJoinRewrite.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.RangeJoin)
       import s.implicits._
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("value"), col("ts").as("t"))

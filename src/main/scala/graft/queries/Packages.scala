@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Graft, Tables}
-import graft.functions.GraftFunctions
 
 /** Package-metadata semantics (SURVEY.md §1.1, §2.2 P5, §2.3 J6/J7, §2.4 A5,
   * §7 M2) — the reference's distinctive layer: version-ordered records,
@@ -104,7 +103,6 @@ object Packages {
   val queries: Seq[(String, QFn)] = Seq(
     // A5/W1 + custom expression — latest version per package name.
     "q30_latest_package_version" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       Tables.packages(s, dir)
         .groupBy("name")
         .agg(
@@ -122,7 +120,6 @@ object Packages {
     // the FunctionRegistry path end-to-end: a reference user could POST
     // this text without touching the DataFrame API.
     "q132_sql_endpoint" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       Tables.packages(s, dir).createOrReplaceTempView("v_packages")
       s.sql("""
         SELECT name,
@@ -148,7 +145,6 @@ object Packages {
     // One catalog scan + broadcast advisory join; version_compare is the
     // codegen'd comparator on both the affected filter and the verdict.
     "q134_security_advisories" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       val adv = Tables.packageNames(s, dir)
         .filter(pmod(col("i"), lit(5)) === 2)
         .select(col("name"),
@@ -211,7 +207,6 @@ object Packages {
     // max_by over struct sort keys (pin, version_sort_key, pkg_id) riding
     // the native comparator — no window, no second shuffle.
     "q108_repo_pinning" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       // repo keyed on pkg_id div 60 — the per-name version counter — so a
       // name's versions SPREAD across repos (pkg_id % k for k | 60 would
       // pin each name to one repo and make the query degenerate)
@@ -308,7 +303,6 @@ object Packages {
     // — the parse AND the custom ordering judged against independent
     // arithmetic. One window pass over the distinct catalog.
     "q199_version_bumps" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       import org.apache.spark.sql.expressions.Window
       val pk = Tables.packages(s, dir).select("name", "version").distinct()
       val w = Window.partitionBy("name").orderBy(expr("version_sort_key(version)"))
@@ -379,7 +373,6 @@ object Packages {
 
     // P5 constraint predicate + A5 per group — versions satisfying >= 2.6.0-r1.
     "q31_version_constraint_stats" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       Tables.packages(s, dir)
         .groupBy("arch")
         .agg(
@@ -393,7 +386,6 @@ object Packages {
     // J6 dependency resolution with a version constraint: a dep resolves iff
     // some version of the target >= 2.0.0 exists.
     "q32_depends_resolution" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       val resolvable = Tables.packages(s, dir)
         .filter(expr("version_compare(version, '2.0.0-r0')") >= 0)
         .select(col("name").as("dep")).distinct()

@@ -259,7 +259,6 @@ object Resolution {
     // one max_by on a (version_sort_key, name) struct (no window, no
     // second shuffle).
     "q63_file_owner" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       Tables.files(s, dir)
         .filter(col("path").startsWith("/usr/bin/"))
         .groupBy("path")
@@ -277,7 +276,6 @@ object Resolution {
     // satisfaction. LEFT joins keep unsatisfiable specs visible with zero
     // counts ('=' against -rN-only versions, the classic empty resolution).
     "q64_provides_resolution" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       val specs = Tables.dependsSpecs(s, dir)
         .withColumn("c", expr("parse_constraint(spec)"))
       val pr = Tables.provides(s, dir)
@@ -306,7 +304,6 @@ object Resolution {
     // n_joint_ok = 0 across the board — a real conflict the engine (and
     // the independent oracle) both detect, while the range tier varies.
     "q113_joint_constraints" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       val con = Tables.dependsSpecs(s, dir)
         .select(expr("parse_constraint(spec)").as("c"))
         .select(col("c.name").as("cname"), col("c.op").as("cop"), col("c.ver").as("cver"))
@@ -366,7 +363,6 @@ object Resolution {
     // genuinely differ (even/odd pkg_ids serve disjoint concrete-arch
     // version sets); the oracle re-derives both sides arithmetically.
     "q133_multiarch_resolution" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       val visible = Tables.packages(s, dir)
         .withColumn("arch_eff",
           when(pmod(col("pkg_id"), lit(9)) === 4, "all").otherwise(col("arch")))
@@ -415,7 +411,6 @@ object Resolution {
     // arch — the difference a cross-compiling user actually hits.
     "q143_multiarch_plan" -> { (s, dir) =>
       import s.implicits._
-      GraftFunctions.ensureRegistered(s)
       val visible = Tables.packages(s, dir)
         .withColumn("arch_eff",
           when(pmod(col("pkg_id"), lit(9)) === 4, "all").otherwise(col("arch")))
@@ -517,7 +512,6 @@ object Resolution {
     // oracle re-derives both rankings from integer arithmetic; Spark goes
     // through the real comparators' sort keys.
     "q66_eco_version_order" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       // numeric prefix is a function of the NAME (constant within a
       // group), suffix of the record — so the suffix rank alone decides
       // "latest" and the rpm/deb divergence is actually exercised
@@ -703,7 +697,6 @@ object Resolution {
     // resolutionEdges — alternation adds one posexplode and one
     // min-aggregation, no new shuffle shape.
     "q127_ordep_resolution" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       // the alternative LIST is the source of truth; ordep is derived
       // display text — never re-split (a real Debian spec can itself
       // contain '|', and a split-roundtrip would mis-index alternatives)
@@ -926,7 +919,6 @@ object Resolution {
     // suffix rank alone decides, and the oracle re-derives both rankings
     // arithmetically.
     "q72_apk_version_order" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       val v2 = Tables.packages(s, dir)
         .withColumn("i", pmod(col("pkg_id"), lit(Tables.PackageNameCount)))
         .select(col("name"),
@@ -957,7 +949,6 @@ object Resolution {
     // Added/removed are record-level exceptAll multiset diffs;
     // upgraded/downgraded classify the per-name latest via version_compare.
     "q67_snapshot_diff" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       val curr = snapshotCurr(s, dir)
       val next = snapshotNext(s, dir)
       val sa = graft.Ingest.parseIndex(graft.Ingest.renderIndexOf(curr)).select("name", "version")
@@ -1048,7 +1039,6 @@ object Resolution {
     // One join tree keyed on name columns; the latest-version pick is the
     // q30 bounded max_by, no window over the catalog.
     "q95_upgrade_breakage" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       upgradeBreakage(Tables.dependsSpecs(s, dir), Tables.provides(s, dir),
         Tables.packages(s, dir).select("name", "version"))
     },
@@ -1083,7 +1073,6 @@ object Resolution {
     // the SAME version_sort_key the engine sorts by everywhere; the oracle
     // re-derives both rankings from integer tuples.
     "q102_owner_transitions" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       val fc = Tables.files(s, dir)
       val ownC = fc.groupBy("path").agg(
         countDistinct("name").as("n_owners_curr"),
@@ -1205,7 +1194,7 @@ object Resolution {
     // unrolls identical values. Scale chosen so value×scale stays far
     // inside int64 (values ≤ a few×scale, scale² ≈ 3.6e13).
     "q173_hits" -> { (s, dir) =>
-      // ONE implementation — operators.Hits — shared with HitsSpec's toy
+      // ONE implementation — operators.Hits — shared with Round9Spec's toy
       // graphs; fixed iteration count matches the unrolled oracle
       graft.operators.Hits.run(s, resolvedEdges(s, dir),
           Tables.packageNames(s, dir).select("name"), HitsIters, 6000000L)
@@ -1257,7 +1246,6 @@ object Resolution {
     // kept back"); the rest upgrade. One catalog aggregation + one
     // broadcast holds join + one edge aggregation — no new shuffle shape.
     "q170_upgrade_plan" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       val vs = Tables.packages(s, dir)
         .groupBy("name")
         .agg(
@@ -1334,7 +1322,6 @@ object Resolution {
     // with certified = 0, so both verdict branches are real. Two
     // name-keyed joins + one aggregate over the plan-restricted spec set.
     "q208_plan_certificate" -> { (s, dir) =>
-      GraftFunctions.ensureRegistered(s)
       val plan = graft.operators.Closure.reachable(s, resolvedEdges(s, dir), "pkg-00")
         .select(col("name"))
       val specs = Tables.dependsSpecs(s, dir)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.plans.GraftPlanner
 
 /** Persisted per-column NDV sketch statistics + the rule that consumes
   * them (VERDICT r10 item 3 — "close the statistics→plan loop").
@@ -118,8 +119,8 @@ object StatsStore {
     * count — exactly Spark's ShiftLeft), the numerator is the exact
     * integer alpha_64·m²·2^55 = 1890844672 · 36028797018963968, and `div`
     * on positive decimals is integral division truncating toward zero —
-    * BigInt `/`. PrimeParitySpec pins primed == re-read for every store a
-    * build publishes. */
+    * BigInt `/`. Round20Spec pins this against `estExpr` and primed ==
+    * re-read for every store a build publishes. */
   private[graft] def estFromRegs(regs: Seq[Long]): Long = {
     val sumScaled = regs.foldLeft(0L)((a, r) => a + (1L << (55L - r).toInt))
     ((BigInt(1890844672L) * BigInt(36028797018963968L)) /
@@ -603,7 +604,7 @@ object StatsStore {
     * each task so a spec-lowered cap governs pool threads too. Shared with
     * the index-store writers (round 19) — same discipline, same pool.
     * Safe to NEST (round 20): the cached pool never starves a parked
-    * Await, so a task may itself call inParallel (InParallelSpec drives a
+    * Await, so a task may itself call inParallel (Round20Spec drives a
     * deliberately nested call to completion). */
   private[graft] def inParallel[T](tasks: Seq[() => T]): Seq[T] =
     if (tasks.lengthCompare(1) <= 0) tasks.map(_())
@@ -797,7 +798,7 @@ object StatsStore {
 
   /** The seven planner-catalog maps, derived DRIVER-SIDE from content the
     * publisher already holds — exactly what each [[graft.plans.StatsCatalog]]
-    * reader would compute from the written parquet (PrimeParitySpec pins
+    * reader would compute from the written parquet (Round20Spec pins
     * equality kind by kind). Priming the catalog at publish time makes the
     * first planning against a freshly built store cost ZERO Spark jobs;
     * before round 20 every lifecycle-class query paid one
@@ -1325,8 +1326,7 @@ object StatsStore {
     // BroadcastHashJoin in the initial plan) and negative (no stats →
     // SortMergeJoin).
     "q274_stats_broadcast_join" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureStats(s, dir))
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "8192")
       val prioDim = Tables.orders(s, dir)
@@ -1365,8 +1365,7 @@ object StatsStore {
     // of the interval table. Hash-matches an oracle that re-derives the
     // windows from events and replays the naive join.
     "q276_range_join_catalog_width" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.RangeJoinRewrite.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.RangeJoin)
       val p = ensureStats(s, dir)
       s.conf.set(graft.plans.StatsCatalog.DirKey, p)
       val wins = s.read.parquet(
@@ -1393,8 +1392,7 @@ object StatsStore {
     // the whole history from raw through the q89 island walk and replays
     // the naive range join.
     "q312_scd2_span_range_join" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.RangeJoinRewrite.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.RangeJoin)
       val p = ensureStats(s, dir)
       s.conf.set(graft.plans.StatsCatalog.DirKey, p)
       val hist = s.read.parquet(
@@ -1432,8 +1430,7 @@ object StatsStore {
     // integer thousandths before aggregation so every sum is
     // order-independent exact integer math.
     "q280_fanout_veto_join" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureStats(s, dir))
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "1048576")
       val ex = Tables.embeddings(s, dir)
@@ -1472,8 +1469,7 @@ object StatsStore {
     // written order). Event values are quantized to integer cents so the
     // sums are order-free exact integers.
     "q284_ndv_join_reorder" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureStats(s, dir))
       val o = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority"))
@@ -1525,8 +1521,7 @@ object StatsStore {
     // null-extension path is exercised, not just compiled. Width comes
     // from the persisted span catalog like q276.
     "q281_left_range_join_coverage" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.RangeJoinRewrite.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.RangeJoin)
       val p = ensureStats(s, dir)
       s.conf.set(graft.plans.StatsCatalog.DirKey, p)
       val wins = s.read.parquet(
@@ -1554,8 +1549,7 @@ object StatsStore {
     // the swap AND that a PARTIALLY covered chain stays put. l_quantity
     // is integral, so the double sum is exact in any order.
     "q289_reorder_uncovered_key" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureStats(s, dir))
       val o = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority"))
@@ -1592,8 +1586,7 @@ object StatsStore {
     // PlanAuditSpec pins the commute WITH the histogram and written order
     // WITHOUT it. Event values quantize to integer cents.
     "q291_range_filter_reorder" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureStats(s, dir))
       val o = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority"))
@@ -1622,8 +1615,7 @@ object StatsStore {
     // pins the partial aggregate below the join WITH stats and its
     // absence WITHOUT.
     "q294_eager_pre_aggregation" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureStats(s, dir))
       val ev = Tables.events(s, dir)
         .select(col("user_id"),
@@ -1647,8 +1639,7 @@ object StatsStore {
     // refinement is deliberately not used for broadcast decisions).
     // Answer plan-independent; PlanAuditSpec pins flip + negative.
     "q295_hist_broadcast_join" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureStats(s, dir))
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "131072")
       val ev = Tables.events(s, dir)
@@ -1673,8 +1664,7 @@ object StatsStore {
     // below, the multiplying join last. countDistinct keeps the eager-agg
     // rule out so the pin isolates the reorder. Answer plan-independent.
     "q296_multi_dim_reorder_chain" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureStats(s, dir))
       val li = Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
@@ -1703,8 +1693,7 @@ object StatsStore {
     // PlanAuditSpec pins the composed fixed point (partial agg below a
     // join AND the pre-aggregated side bottom-most).
     "q297_reorder_eager_agg_compose" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureStats(s, dir))
       val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
       val ev = Tables.events(s, dir)
@@ -1734,8 +1723,7 @@ object StatsStore {
     // decomposition shape via EagerAggSpec (incl. a >2^53 constructed
     // case).
     "q301_eager_avg_pushdown" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureStats(s, dir))
       val ev = Tables.events(s, dir)
         .select(col("user_id"),
@@ -1786,8 +1774,7 @@ object StatsStore {
     // the merged statistics immediately. Answer plan-independent;
     // PlanAuditSpec pins the flip from generation 2 and the negative.
     "q310_appended_hist_consumer" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       val root = scratchRoot("graft_hist_consume")
       val ev0 = Tables.events(s, dir)
       buildTableStats(s, root, "events", ev0.filter(expr("event_id % 5 <> 0")),
@@ -1819,8 +1806,7 @@ object StatsStore {
     // plan-independent; PlanAuditSpec pins flip + filter-blind negative
     // + the CAS-merge soundness case (merged counter == exact mass).
     "q313_counter_in_broadcast" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       val root = scratchRoot("graft_cnt_consume")
       buildTableStats(s, root, "events", Tables.events(s, dir),
         Seq("user_id"), Seq("user_id"))
@@ -1851,8 +1837,7 @@ object StatsStore {
     // pins the flip AND the preserved-side negative (a small PRESERVED
     // side must never be hinted — that is not a hash-join shape).
     "q318_left_join_broadcast" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureStats(s, dir))
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "8192")
       val urgent = Tables.orders(s, dir)
@@ -1879,8 +1864,7 @@ object StatsStore {
     // PlanAuditSpec pins the commute, the counter-less written order, and
     // stored-counter == exact-count for every event_type.
     "q316_string_counter_reorder" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       val root = scratchRoot("graft_streq_consume")
       // the two tables' builds are independent scans (round 20, §2.6);
       // the CAS serializes their publishes per root, and the final merged
@@ -1941,8 +1925,7 @@ object StatsStore {
     // stats-less negative; EagerAggSpec proves the constructed frame
     // (dangling keys, NULL fact keys, duplicate dim keys) exactly.
     "q323_outer_eager_agg" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureStats(s, dir))
       val ev = Tables.events(s, dir)
         .select(col("user_id"),
@@ -1973,8 +1956,7 @@ object StatsStore {
     // PlanAuditSpec pins the swapped shape (LeftOuter on TOP) and the
     // stats-less written-order negative.
     "q322_outer_commute_reorder" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       val root = scratchRoot("graft_outer_commute")
       // counters on BOTH slice conjuncts (integral IN + md5 string
       // equality) — the exact masses multiply under scanRows and the
@@ -2021,8 +2003,7 @@ object StatsStore {
     // the stats-less sort-merge negative, and the preserved-side bail
     // when only the LEFT side is small.
     "q324_exists_semi_broadcast" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       val root = scratchRoot("graft_semi_flip")
       buildTableStats(s, root, "events", Tables.events(s, dir),
         Seq("user_id"), Seq("user_id"), Seq("event_type"))
@@ -2054,8 +2035,7 @@ object StatsStore {
     // constructed semi/anti frames (dropped groups, dangling keys)
     // exactly.
     "q325_semi_eager_agg" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureStats(s, dir))
       val ev = Tables.events(s, dir)
         .select(col("user_id"), col("event_type"),
@@ -2130,8 +2110,7 @@ object StatsStore {
     // flip and the stats-less negative; CentsDomainSpec pins the
     // unbounded-domain refusal (l_extendedprice).
     "q321_double_range_broadcast" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       val root = graft.LifecycleMeter.time {
         val r = scratchRoot("graft_cents_flip")
         analyze(s, dir, r,
@@ -2165,8 +2144,7 @@ object StatsStore {
     // countDistinct keeps the eager rule out; PlanAuditSpec pins the
     // left-deep fixed point and the mid-tower-hint bail.
     "q314_deep_tower_rotation" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureStats(s, dir))
       val nat = Tables.nation(s, dir).select(col("n_nationkey"), col("n_name"))
       val cust = Tables.customer(s, dir).select(col("c_custkey"), col("c_nationkey"))
@@ -2193,8 +2171,7 @@ object StatsStore {
     // argument per key TUPLE); PlanAuditSpec pins the composite partial
     // below the join WITH stats and its absence WITHOUT.
     "q303_composite_eager_agg" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureStats(s, dir))
       val ev = Tables.events(s, dir)
         .select(col("user_id"), col("event_type"),
@@ -2221,8 +2198,7 @@ object StatsStore {
     // inner dim, which the commute guard rejects), so the pin isolates
     // the chain push. Answer plan-independent.
     "q304_chain_eager_agg" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureStats(s, dir))
       val ev = Tables.events(s, dir)
         .select(col("user_id"),
@@ -2250,8 +2226,7 @@ object StatsStore {
     // out so the pin isolates the rotation; PlanAuditSpec pins the
     // rotated shape and the written-order negative.
     "q307_right_deep_reorder" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureStats(s, dir))
       val cust = Tables.customer(s, dir).select(col("c_custkey"), col("c_mktsegment"))
       val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
@@ -2277,8 +2252,7 @@ object StatsStore {
     // alone. Answer plan-independent; countDistinct keeps the eager rule
     // out; PlanAuditSpec pins the composed fixed point.
     "q309_rotate_bubble_compose" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureStats(s, dir))
       val cust = Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))
@@ -2305,8 +2279,7 @@ object StatsStore {
     // arg_max/arg_min over raw. The plain orderless first/last stay
     // un-pushed (EagerAggSpec pins the bail).
     "q306_argmax_eager_pushdown" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureStats(s, dir))
       val ev = Tables.events(s, dir)
         .select(col("user_id"), col("event_id"),
@@ -2338,9 +2311,7 @@ object StatsStore {
       val store = ensureStats(s0, dir)
       def planned(df: DataFrame): Unit = { df.queryExecution.optimizedPlan; () }
       // ---- positive session: rules + diagnostics + the stats root
-      val sPos = s0.newSession()
-      graft.plans.SketchStats.ensure(sPos)
-      graft.plans.RangeJoinRewrite.ensure(sPos)
+      val sPos = GraftPlanner.session(s0, GraftPlanner.Sketch, GraftPlanner.RangeJoin)
       graft.plans.RuleDiag.clear(sPos)
       sPos.conf.set(graft.plans.RuleDiag.EnabledKey, "true")
       sPos.conf.set(graft.plans.SketchStats.DirKey, store)
@@ -2461,7 +2432,7 @@ object StatsStore {
       //     every judged SF (o_orderkey NDV scales with the fixture; the
       //     reason strings must stay SF-invariant)
       sPos.conf.set("spark.sql.autoBroadcastJoinThreshold", "16777216")
-      graft.plans.JoinElimination.ensure(sPos)
+      GraftPlanner.install(sPos, GraftPlanner.JoinElim)
       val liJ = Tables.lineitem(sPos, dir)
       val dimJ = Tables.orders(sPos, dir).select(col("o_orderkey")).distinct()
       planned(liJ.join(dimJ, liJ("l_orderkey") === dimJ("o_orderkey"), "left")
@@ -2512,8 +2483,7 @@ object StatsStore {
       graft.plans.RuleDiag.clear(sPos)
       // ---- negative session: diagnostics on, NO stats root — the q274
       // shape must say WHY nothing fired
-      val sNeg = s0.newSession()
-      graft.plans.SketchStats.ensure(sNeg)
+      val sNeg = GraftPlanner.session(s0, GraftPlanner.Sketch)
       graft.plans.RuleDiag.clear(sNeg)
       sNeg.conf.set(graft.plans.RuleDiag.EnabledKey, "true")
       sNeg.conf.set("spark.sql.autoBroadcastJoinThreshold", "8192")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.Tables
+import graft.plans.GraftPlanner
 
 /** Streamed sketches SERVED end-to-end (VERDICT r11 item 5): r11's
   * SketchStreams proved the streamed HDR/HLL registers byte-equal the
@@ -377,8 +378,7 @@ object StreamServe {
     // customer/orders stats from batch), so a missing half keeps written
     // order and the PlanAuditSpec pin fails. Answer plan-independent.
     "q293_unified_stats_reorder" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureUnifiedStats(s, dir))
       val o = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority"))
@@ -420,8 +420,7 @@ object StreamServe {
     // arithmetic to q284 — and PlanAuditSpec pins that the commute fires
     // with THIS store configured.
     "q286_streamed_stats_reorder" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureStreamedStats(s, dir))
       val o = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority"))
@@ -464,8 +463,7 @@ object StreamServe {
     // the eager-agg rule out so the plan isolates the flip; answer
     // plan-independent, PlanAuditSpec pins flip + negative.
     "q299_streamed_hist_broadcast" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureUnifiedStats(s, dir))
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "131072")
       val recent = Tables.events(s, dir)
@@ -492,8 +490,7 @@ object StreamServe {
     // ANALYZE ever ran. Answer plan-independent; PlanAuditSpec pins all
     // three effects in the one fixed-point plan.
     "q300_streamed_full_stack" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureUnifiedStats(s, dir))
       val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
       val ev = Tables.events(s, dir)
@@ -519,9 +516,7 @@ object StreamServe {
     // probe, pinned) with a grouped-dim broadcast flip; the oracle
     // re-derives the windows from events and replays the naive join.
     "q302_unified_all_consumers" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
-      graft.plans.RangeJoinRewrite.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch, GraftPlanner.RangeJoin)
       val root = ensureUnifiedStats(s, dir)
       s.conf.set(graft.plans.StatsCatalog.DirKey, root)
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "16384")
@@ -552,8 +547,7 @@ object StreamServe {
     // the build slot. Answer plan-independent; same oracle arithmetic as
     // q280.
     "q308_unified_fanout_veto" -> { (s0, dir) =>
-      val s = s0.newSession()
-      graft.plans.SketchStats.ensure(s)
+      val s = GraftPlanner.session(s0, GraftPlanner.Sketch)
       s.conf.set(graft.plans.SketchStats.DirKey, ensureUnifiedStats(s, dir))
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "1048576")
       val ex = Tables.embeddings(s, dir)

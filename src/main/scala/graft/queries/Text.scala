@@ -509,7 +509,6 @@ object Text {
     },
 
     "q107_boilerplate_ngrams" -> { (s, dir) =>
-      _root_.graft.functions.GraftFunctions.ensureRegistered(s)
       Tables.documents(s, dir)
         .select(col("doc_id"),
           explode(call_function("token_ngrams", col("text"), lit(8))).as("gram"))

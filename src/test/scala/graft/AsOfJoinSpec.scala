@@ -5,6 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
+import graft.plans.GraftPlanner
+
 /** The custom as-of join operator (graft.plans.AsOfJoin) against three
   * independent definitions of the semantics: the q23 window form on real
   * fixture events, a brute-force in-memory model over generated data
@@ -71,7 +73,7 @@ class AsOfJoinSpec extends AnyFunSuite {
     */
   private def plansAsOf(left: org.apache.spark.sql.DataFrame,
       right: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    graft.plans.AsOfJoinStrategy.ensure(spark)
+    GraftPlanner.install(spark, GraftPlanner.AsOf)
     val lp = left.queryExecution.analyzed
     val rp = right.queryExecution.analyzed
     def a(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, n: String) =

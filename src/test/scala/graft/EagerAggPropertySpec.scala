@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.GraftPlanner
+
 /** Randomized equivalence property for the eager-aggregation pushdown
   * (Yan & Larson VLDB'95): over a seeded space of aggregate sets and
   * grouping choices, the rewritten plan must equal the plain plan
@@ -27,8 +29,7 @@ class EagerAggPropertySpec extends AnyFunSuite {
     }
 
   private lazy val env: (org.apache.spark.sql.SparkSession, String) = {
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val scratch = queries.StatsStore.scratchDir("graft_eagerprop")
     import s.implicits._
     val rnd = new scala.util.Random(42)

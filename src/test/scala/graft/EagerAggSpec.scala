@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.GraftPlanner
+
 /** The eager-aggregation rewrite's soundness contract (Yan & Larson
   * VLDB'95), proven on CONSTRUCTED frames rather than the fixture so the
   * edge cases are guaranteed present:
@@ -34,8 +36,7 @@ class EagerAggSpec extends AnyFunSuite {
   /** A session with the rule active over a flat stats store covering the
     * constructed fact table (rows=2000, ndv(k)=40 → fanout 50 ≥ 8). */
   private lazy val env: (org.apache.spark.sql.SparkSession, String, String) = {
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val scratch = queries.StatsStore.scratchDir("graft_eageragg")
     import s.implicits._
     // fact: 2000 rows over 40 keys (~5% null keys), v = deterministic
@@ -184,8 +185,7 @@ class EagerAggSpec extends AnyFunSuite {
     // a two-conjunct composite-key join — the common warehouse shape —
     // never fired. Duplicate dim key PAIRS keep the duplication argument
     // honest; dangling pairs on both sides too.
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val scratch = queries.StatsStore.scratchDir("graft_eageragg_ck")
     import s.implicits._
     (0 until 2000).map(i => ((i % 20).toLong, (i % 4).toLong, (i * 31 % 97).toLong))
@@ -228,8 +228,7 @@ class EagerAggSpec extends AnyFunSuite {
     // VERDICT r14 item 2, second half: (fact ⋈ d1) ⋈ d2 grouped by a d2
     // attribute — the fact must be traced through BOTH inner equi-joins
     // and the partial inserted below the bottom one.
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val scratch = queries.StatsStore.scratchDir("graft_eageragg_ch")
     import s.implicits._
     (0 until 2000).map(i => ((i % 40).toLong, (i * 31 % 97).toLong))
@@ -271,8 +270,7 @@ class EagerAggSpec extends AnyFunSuite {
     // the two r15 generalizations in one shape: a two-conjunct bottom
     // join under a second dim — the partial groups by both composite
     // keys and lands below the BOTTOM join.
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val scratch = queries.StatsStore.scratchDir("graft_eageragg_cc")
     import s.implicits._
     (0 until 2000).map(i => ((i % 20).toLong, (i % 4).toLong, (i * 31 % 97).toLong))
@@ -331,8 +329,7 @@ class EagerAggSpec extends AnyFunSuite {
     // disagreed by ~1.7 in the mean. The double partial reproduces
     // Average's per-addition rounding, so rewritten == plain exactly
     // (every intermediate here is a multiple of 2^53 — order-independent).
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val scratch = queries.StatsStore.scratchDir("graft_eageragg53")
     import s.implicits._
     val big = 9007199254740993L // 2^53 + 1
@@ -366,8 +363,7 @@ class EagerAggSpec extends AnyFunSuite {
     // max_by/min_by(value, ordering) — decomposable into per-key
     // (extreme value, extreme ordering) partials. Unique ordering o = i
     // makes both plans exact; null values at winning positions included.
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val scratch = queries.StatsStore.scratchDir("graft_eageragg_mb")
     import s.implicits._
     (0 until 2000).map { i =>

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.GraftPlanner
+
 /** Round-9 mining additions: join-elimination soundness (positive + the
   * two negatives that MUST keep their join), the bucketed range join's
   * hash-join plan shape, triangle counting vs brute force, and walk
@@ -27,20 +29,27 @@ class MiningSpec extends AnyFunSuite {
     assert(got.view.mapValues(identity).toMap == want)
   }
 
+  test("q212 installs its rule on a child session, never on the caller's") {
+    val before = spark.experimental.extraOptimizations
+    val df = SparkEntry.queries("q212_join_elimination")(spark, dir)
+    assert(df.sparkSession ne spark)
+    assert(spark.experimental.extraOptimizations == before)
+  }
+
   test("join elimination negative: non-distinct right side keeps its join") {
-    plans.JoinElimination.ensure(spark)
-    val li = Tables.lineitem(spark, dir)
+    val s = GraftPlanner.session(spark, GraftPlanner.JoinElim)
+    val li = Tables.lineitem(s, dir)
     // right side NOT distinct (raw orders keys, duplicated by status rows)
-    val dim = Tables.orders(spark, dir).select(col("o_orderkey"))
+    val dim = Tables.orders(s, dir).select(col("o_orderkey"))
     val df = li.join(dim, li("l_orderkey") === dim("o_orderkey"), "left")
       .select(col("l_returnflag"))
     assert(optimized(df).contains("Join"), "unsound elimination: right not distinct")
   }
 
   test("join elimination negative: referenced right column keeps its join") {
-    plans.JoinElimination.ensure(spark)
-    val li = Tables.lineitem(spark, dir)
-    val dim = Tables.orders(spark, dir).select(col("o_orderkey")).distinct()
+    val s = GraftPlanner.session(spark, GraftPlanner.JoinElim)
+    val li = Tables.lineitem(s, dir)
+    val dim = Tables.orders(s, dir).select(col("o_orderkey")).distinct()
     val df = li.join(dim, li("l_orderkey") === dim("o_orderkey"), "left")
       .select(col("l_returnflag"), col("o_orderkey"))
     assert(optimized(df).contains("Join"), "unsound elimination: right col referenced")

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.GraftPlanner
+
 /** Physical-plan regression tests (SURVEY.md §4.2, the 100 TB read-path
   * properties): filters must reach the parquet scan, small dims must
   * broadcast, projections must prune the scan schema, and no judged query
@@ -240,7 +242,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // equi-join on the manufactured bucket keys
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    graft.plans.RangeJoinRewrite.ensure(s2)
+    GraftPlanner.install(s2, GraftPlanner.RangeJoin)
     s2.conf.set(graft.plans.RangeJoinRewrite.WidthKey, "86400000000")
     import org.apache.spark.sql.functions._
     val ev = Tables.events(s2, dir)
@@ -259,7 +261,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // so the off-switch is spark.graft.rangeJoin.enabled=false / width=0)
     val s3 = spark.newSession()
     s3.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    graft.plans.RangeJoinRewrite.ensure(s3)
+    GraftPlanner.install(s3, GraftPlanner.RangeJoin)
     s3.conf.set(graft.plans.RangeJoinRewrite.EnabledKey, "false")
     val ev3 = Tables.events(s3, dir)
       .select(col("user_id"), expr("unix_micros(cast(ts as timestamp))").as("t"))
@@ -276,8 +278,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("q267 rule: an empty interval yields zero rows, not a Sequence boundary error") {
-    val s2 = spark.newSession()
-    graft.plans.RangeJoinRewrite.ensure(s2)
+    val s2 = GraftPlanner.session(spark, GraftPlanner.RangeJoin)
     s2.conf.set(graft.plans.RangeJoinRewrite.WidthKey, "10")
     import s2.implicits._
     val pts = Seq(5L, 15L, 25L).toDF("t")
@@ -293,8 +294,7 @@ class PlanAuditSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     // positive: stats present → the initial (pre-AQE) plan already
     // broadcasts the grouped dim, so the fact side never shuffles
-    val sPos = spark.newSession()
-    graft.plans.SketchStats.ensure(sPos)
+    val sPos = GraftPlanner.session(spark, GraftPlanner.Sketch)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
       queries.StatsStore.ensureStatsFor(sPos, dir))
     // 8 KB: the HLL small-set floor (~45–49) × ~44 B row width ≈ 2.2 KB
@@ -313,8 +313,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // negative: no stats dir → Spark's static estimate (child size of the
     // Aggregate = the pruned orders scan, over the 8 KB threshold) keeps
     // the sort-merge join in the initial plan
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     sNeg.conf.set("spark.sql.autoBroadcastJoinThreshold", "8192")
     val pNeg = q(sNeg).queryExecution.executedPlan.toString
     assert(pNeg.contains("SortMergeJoin"),
@@ -340,8 +339,7 @@ class PlanAuditSpec extends AnyFunSuite {
       finally s.sparkContext.removeSparkListener(l)
       n.get()
     }
-    val sCat = spark.newSession()
-    graft.plans.RangeJoinRewrite.ensure(sCat)
+    val sCat = GraftPlanner.session(spark, GraftPlanner.RangeJoin)
     val store = queries.StatsStore.ensureStatsFor(sCat, dir)
     sCat.conf.set(graft.plans.StatsCatalog.DirKey, store)
     val winsPath = s"${graft.plans.StatsCatalog.resolveBase(store)}/windows.parquet"
@@ -358,8 +356,7 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(jobs == 0L, s"planning ran $jobs job(s) — the interval side was probed " +
       "despite a warm span catalog")
     // fallback: same join, fresh session, NO stats dir → the probe job runs
-    val sProbe = spark.newSession()
-    graft.plans.RangeJoinRewrite.ensure(sProbe)
+    val sProbe = GraftPlanner.session(spark, GraftPlanner.RangeJoin)
     val wins2 = sProbe.read.parquet(winsPath)
     val ev2 = Tables.events(sProbe, dir)
       .select(org.apache.spark.sql.functions.expr("unix_micros(cast(ts as timestamp))").as("t"))
@@ -387,9 +384,7 @@ class PlanAuditSpec extends AnyFunSuite {
       finally s.sparkContext.removeSparkListener(l)
       n.get()
     }
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
-    graft.plans.RangeJoinRewrite.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch, GraftPlanner.RangeJoin)
     val root = queries.StreamServe.ensureUnifiedStats(s, dir)
     s.conf.set(graft.plans.StatsCatalog.DirKey, root)
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "16384")
@@ -421,9 +416,7 @@ class PlanAuditSpec extends AnyFunSuite {
       s"the grouped-dim flip did not fire from the unified root:\n${planned.take(2500)}")
     // negative: same frames, no stats dir → the probe job runs and the
     // grouped dim sort-merges
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
-    graft.plans.RangeJoinRewrite.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch, GraftPlanner.RangeJoin)
     sNeg.conf.set("spark.sql.autoBroadcastJoinThreshold", "16384")
     val wins2 = sNeg.read.parquet(
       s"${graft.plans.StatsCatalog.resolveBase(root)}/windows.parquet")
@@ -465,8 +458,7 @@ class PlanAuditSpec extends AnyFunSuite {
       finally s.sparkContext.removeSparkListener(l)
       n.get()
     }
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     s.conf.set(graft.plans.SketchStats.DirKey,
       queries.StatsStore.ensureStatsFor(s, dir))
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "8192")
@@ -515,8 +507,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // (events row count: streaming aggregate; events.user_id NDV: merged
     // streamed HLL registers) or a bounded batch analyze (dims); the
     // commute must fire exactly as it does from the batch store
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     s.conf.set(graft.plans.SketchStats.DirKey,
       queries.StreamServe.ensureStreamedStats(s, dir))
     val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
@@ -534,8 +525,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // VERDICT r13 item 5: ONE root, fact entries stream-maintained (events
     // row count + user_id registers), dim entries batch-analyzed; the
     // commute needs BOTH halves priced in the same plan
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     s.conf.set(graft.plans.SketchStats.DirKey,
       queries.StreamServe.ensureUnifiedStats(s, dir))
     val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
@@ -568,16 +558,14 @@ class PlanAuditSpec extends AnyFunSuite {
     // bucket-mass UB at sf0.001 = 125 rows (the slice plus the rest of
     // its equi-depth bucket) × 80 B output width = 10 000 ≤ threshold/2;
     // both sides' pruned static estimates (≈24/28 KB) sit above 20 480
-    val sPos = spark.newSession()
-    graft.plans.SketchStats.ensure(sPos)
+    val sPos = GraftPlanner.session(spark, GraftPlanner.Sketch)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
       queries.StreamServe.ensureUnifiedStats(sPos, dir))
     sPos.conf.set("spark.sql.autoBroadcastJoinThreshold", "20480")
     val pPos = q(sPos).queryExecution.executedPlan.toString
     assert(pPos.contains("BroadcastHashJoin") && !pPos.contains("SortMergeJoin"),
       s"streamed histogram did not flip the ts-filtered slice:\n${pPos.take(2500)}")
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     sNeg.conf.set("spark.sql.autoBroadcastJoinThreshold", "20480")
     val pNeg = q(sNeg).queryExecution.executedPlan.toString
     assert(pNeg.contains("SortMergeJoin"),
@@ -592,8 +580,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // selective than the expanding events side and block the swap; the
     // composite product (capped at rows(orders) — composite NDV can't
     // exceed the row count) prices it correctly and the commute fires
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     s.conf.set(graft.plans.SketchStats.DirKey,
       queries.StatsStore.ensureStatsFor(s, dir))
     val o = Tables.orders(s, dir)
@@ -617,8 +604,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // ~10 rows and commutes in first. The refinement only applies in the
     // estimator's accurate regime (NDV ≥ 100 — o_custkey qualifies), so
     // the HLL small-set floor can never overstate a filter's selectivity
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     s.conf.set(graft.plans.SketchStats.DirKey,
       queries.StatsStore.ensureStatsFor(s, dir))
     val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
@@ -647,16 +633,14 @@ class PlanAuditSpec extends AnyFunSuite {
       o.join(ev, col("o_custkey") === col("user_id"))
         .join(cust, col("o_custkey") === col("c_custkey"))
     }
-    val sPos = spark.newSession()
-    graft.plans.SketchStats.ensure(sPos)
+    val sPos = GraftPlanner.session(spark, GraftPlanner.Sketch)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
       queries.StatsStore.ensureStatsFor(sPos, dir))
     val posBottom = bottomJoinRightTables(q(sPos))
     assert(posBottom.contains("customer") && !posBottom.contains("events"),
       s"stats present but the reducing dim was not commuted below the expanding one: $posBottom")
     // negative control: no stats dir → the written order survives
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val negBottom = bottomJoinRightTables(q(sNeg))
     assert(negBottom.contains("events") && !negBottom.contains("customer"),
       s"negative control: expected the written join order: $negBottom")
@@ -699,8 +683,7 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(bottom.contains("customer") && !bottom.contains("lineitem"),
       s"the uncovered-key chain did not reorder: $bottom")
     // negative control: no stats dir → written order survives
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     def q(s: org.apache.spark.sql.SparkSession) = {
       val o = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority"))
@@ -717,8 +700,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // must leave the chain in written order — an unpriceable dim yields
     // no factor, never a guess (the r13 "silently keeps written order"
     // failure mode is now the DOCUMENTED conservative behavior, pinned)
-    val sPart = spark.newSession()
-    graft.plans.SketchStats.ensure(sPart)
+    val sPart = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val partial = queries.StatsStore.scratchDir("graft_stats_partial")
     import sPart.implicits._
     Seq(("orders", "o_orderkey", 15000L), ("lineitem", "l_orderkey", 14743L),
@@ -748,8 +730,7 @@ class PlanAuditSpec extends AnyFunSuite {
       o.join(ev, o("o_custkey") === ev("user_id"))
         .join(r2, o("o_custkey") === r2("o_custkey"))
     }
-    val sPos = spark.newSession()
-    graft.plans.SketchStats.ensure(sPos)
+    val sPos = GraftPlanner.session(spark, GraftPlanner.Sketch)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
       queries.StatsStore.ensureStatsFor(sPos, dir))
     val posBottom = bottomJoinRightTables(q(sPos))
@@ -757,8 +738,7 @@ class PlanAuditSpec extends AnyFunSuite {
       s"histogram did not price the range-filtered dim into the commute: $posBottom")
     // negative: the SAME coverage analyzed WITHOUT histograms — the dim
     // prices at full table size and written order survives
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val noHist = queries.StatsStore.scratchDir("graft_stats_nohist") + "/store"
     queries.StatsStore.analyze(sNeg, dir, noHist, queries.StatsStore.DefaultNdv)
     sNeg.conf.set(graft.plans.SketchStats.DirKey, noHist)
@@ -796,14 +776,12 @@ class PlanAuditSpec extends AnyFunSuite {
           } => a
         }.nonEmpty)
       }
-    val sPos = spark.newSession()
-    graft.plans.SketchStats.ensure(sPos)
+    val sPos = GraftPlanner.session(spark, GraftPlanner.Sketch)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
       queries.StatsStore.ensureStatsFor(sPos, dir))
     assert(aggBelowJoin(q(sPos)),
       s"no partial aggregate below the join:\n${q(sPos).queryExecution.optimizedPlan}")
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     assert(!aggBelowJoin(q(sNeg)),
       "negative control: partial aggregate fired without stats")
     // equivalence: full result sets equal (sum/count/min/max distribute)
@@ -841,8 +819,7 @@ class PlanAuditSpec extends AnyFunSuite {
           } => a
         }.nonEmpty
       }
-    val sPos = spark.newSession()
-    graft.plans.SketchStats.ensure(sPos)
+    val sPos = GraftPlanner.session(spark, GraftPlanner.Sketch)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
       queries.StatsStore.ensureStatsFor(sPos, dir))
     assert(partialBelowLeftJoin(q(sPos)),
@@ -860,8 +837,7 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!nullSupplying.queryExecution.optimizedPlan.collect { case j: LJoin => j }
         .exists(_.right.collectFirst { case a: Aggregate => a }.nonEmpty),
       "a null-supplying fact side must never host the partial")
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     assert(!partialBelowLeftJoin(q(sNeg)),
       "negative control: partial fired without stats")
     val pos = q(sPos).orderBy(asc_nulls_first("c_mktsegment")).collect().toSeq
@@ -887,8 +863,7 @@ class PlanAuditSpec extends AnyFunSuite {
       cust.join(o.join(li, col("o_orderkey") === col("l_orderkey")),
         col("c_custkey") === col("o_custkey"))
     }
-    val sPos = spark.newSession()
-    graft.plans.SketchStats.ensure(sPos)
+    val sPos = GraftPlanner.session(spark, GraftPlanner.Sketch)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
       queries.StatsStore.ensureStatsFor(sPos, dir))
     val posTop = q(sPos).queryExecution.optimizedPlan.collect { case j: LJoin => j }.head
@@ -896,8 +871,7 @@ class PlanAuditSpec extends AnyFunSuite {
       s"rotation did not land the expanding join last: right=${tablesOf(posTop.right)}")
     assert(tablesOf(posTop.left).toSet == Set("customer", "orders"),
       s"rotation lost a relation: left=${tablesOf(posTop.left)}")
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val negTop = q(sNeg).queryExecution.optimizedPlan.collect { case j: LJoin => j }.head
     assert(negTop.right.collectFirst { case j: LJoin => j }.nonEmpty,
       "negative control: the written right-deep shape should survive without stats")
@@ -909,8 +883,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // the q299 flip shape, but the histogram the planner reads was
     // produced by the O(delta) counter merge (build base slice, append
     // delta) — no full-table analyze ever ran on this root.
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val root = queries.StatsStore.scratchDir("graft_hist_consume_pin") + "/store"
     val ev0 = Tables.events(s, dir)
     queries.StatsStore.buildTableStats(s, root, "events",
@@ -935,8 +908,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val pPos = q(s).queryExecution.executedPlan.toString
     assert(pPos.contains("BroadcastHashJoin") && !pPos.contains("SortMergeJoin"),
       s"the appended histogram did not price the flip:\n${pPos.take(2500)}")
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     sNeg.conf.set("spark.sql.autoBroadcastJoinThreshold", "20480")
     val pNeg = q(sNeg).queryExecution.executedPlan.toString
     assert(pNeg.contains("SortMergeJoin"),
@@ -965,8 +937,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // and a hinted composite right side must NOT rotate (no position for
     // the composite's own hint after the rewrite)
     import org.apache.spark.sql.functions._
-    val s2 = spark.newSession()
-    graft.plans.SketchStats.ensure(s2)
+    val s2 = GraftPlanner.session(spark, GraftPlanner.Sketch)
     s2.conf.set(graft.plans.SketchStats.DirKey,
       queries.StatsStore.ensureStatsFor(s2, dir))
     val cust = Tables.customer(s2, dir).select(col("c_custkey"), col("c_mktsegment"))
@@ -1012,14 +983,12 @@ class PlanAuditSpec extends AnyFunSuite {
             } => a
         }.nonEmpty)
       }
-    val sPos = spark.newSession()
-    graft.plans.SketchStats.ensure(sPos)
+    val sPos = GraftPlanner.session(spark, GraftPlanner.Sketch)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
       queries.StatsStore.ensureStatsFor(sPos, dir))
     assert(compositePartial(q(sPos)),
       s"no composite-key partial below the join:\n${q(sPos).queryExecution.optimizedPlan}")
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     assert(!compositePartial(q(sNeg)), "composite partial fired without stats")
     assert(q(sPos).orderBy("dt").collect().toSeq === q(sNeg).orderBy("dt").collect().toSeq,
       "composite-key eager aggregation changed the answer")
@@ -1047,14 +1016,12 @@ class PlanAuditSpec extends AnyFunSuite {
           .exists(inner => Seq(inner.left, inner.right)
             .exists(_.collectFirst { case a: Aggregate => a }.nonEmpty)))
       }
-    val sPos = spark.newSession()
-    graft.plans.SketchStats.ensure(sPos)
+    val sPos = GraftPlanner.session(spark, GraftPlanner.Sketch)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
       queries.StatsStore.ensureStatsFor(sPos, dir))
     assert(belowBottom(q(sPos)),
       s"the partial did not land below the bottom join:\n${q(sPos).queryExecution.optimizedPlan}")
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     assert(!belowBottom(q(sNeg)), "chain partial fired without stats")
     assert(q(sPos).orderBy("n_name").collect().toSeq === q(sNeg).orderBy("n_name").collect().toSeq,
       "chain eager aggregation changed the answer")
@@ -1083,8 +1050,7 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(below.contains("part") && below.contains("supplier"),
       s"reducing dims not all below the expanding join: $below")
     // negative control: written order keeps supplier last
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     import org.apache.spark.sql.functions._
     val li = Tables.lineitem(sNeg, dir)
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
@@ -1182,8 +1148,7 @@ class PlanAuditSpec extends AnyFunSuite {
         .select(col("o_custkey"), col("o_orderpriority"), col("o_orderstatus"))
       ev.join(recent, col("user_id") === col("o_custkey"))
     }
-    val sPos = spark.newSession()
-    graft.plans.SketchStats.ensure(sPos)
+    val sPos = GraftPlanner.session(spark, GraftPlanner.Sketch)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
       queries.StatsStore.ensureStatsFor(sPos, dir))
     sPos.conf.set("spark.sql.autoBroadcastJoinThreshold", "16384")
@@ -1192,8 +1157,7 @@ class PlanAuditSpec extends AnyFunSuite {
       s"histogram did not flip the filtered dim to broadcast:\n${pPos.take(2500)}")
     // negative: same query, no stats — the filter-blind file-size
     // estimate keeps the sort-merge join
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     sNeg.conf.set("spark.sql.autoBroadcastJoinThreshold", "16384")
     val pNeg = q(sNeg).queryExecution.executedPlan.toString
     assert(pNeg.contains("SortMergeJoin"),
@@ -1235,8 +1199,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // hint must travel with the dim into the bottom join, where it forces
     // the broadcast build.
     import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin}
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     s.conf.set(graft.plans.SketchStats.DirKey,
       queries.StatsStore.ensureStatsFor(s, dir))
     // keep the session threshold tiny so ONLY the hint can justify the
@@ -1285,14 +1248,12 @@ class PlanAuditSpec extends AnyFunSuite {
         .select(col("vec_id"), explode(col("embedding")).as("x"))
       s.range(300000).join(ex, col("id") === col("vec_id"))
     }
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     sNeg.conf.set("spark.sql.autoBroadcastJoinThreshold", "1048576")
     val pNeg = q(sNeg).queryExecution.executedPlan.toString
     assert(pNeg.contains("BroadcastHashJoin"),
       s"negative control: expected the naive plan to broadcast the exploded side:\n${pNeg.take(2500)}")
-    val sPos = spark.newSession()
-    graft.plans.SketchStats.ensure(sPos)
+    val sPos = GraftPlanner.session(spark, GraftPlanner.Sketch)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
       queries.StatsStore.ensureStatsFor(sPos, dir))
     sPos.conf.set("spark.sql.autoBroadcastJoinThreshold", "1048576")
@@ -1330,8 +1291,7 @@ class PlanAuditSpec extends AnyFunSuite {
         .select(col("vec_id"), explode(col("embedding")).as("x"))
       s.range(300000).join(ex, col("id") === col("vec_id"))
     }
-    val sPos = spark.newSession()
-    graft.plans.SketchStats.ensure(sPos)
+    val sPos = GraftPlanner.session(spark, GraftPlanner.Sketch)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
       queries.StreamServe.ensureUnifiedStats(sPos, dir))
     sPos.conf.set("spark.sql.autoBroadcastJoinThreshold", "1048576")
@@ -1348,8 +1308,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // "no stats". First plan: the configured dir has no stats table →
     // lookup fails → sort-merge. Then the store appears; the NEXT plan
     // must pick it up with no invalidate() call.
-    val s2 = spark.newSession()
-    graft.plans.SketchStats.ensure(s2)
+    val s2 = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val missing = queries.StatsStore.scratchDir("graft_stats_missing")
     s2.conf.set(graft.plans.SketchStats.DirKey, missing)
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "4096")
@@ -1388,8 +1347,7 @@ class PlanAuditSpec extends AnyFunSuite {
       finally s.sparkContext.removeSparkListener(l)
       n.get()
     }
-    val s = spark.newSession()
-    graft.plans.RangeJoinRewrite.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.RangeJoin)
     val store = queries.StatsStore.ensureStatsFor(s, dir)
     s.conf.set(graft.plans.StatsCatalog.DirKey, store)
     // warm the catalog memo (one bounded read) BEFORE the measured planning
@@ -1418,8 +1376,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // append(delta) the merged counter for a member EQUALS the exact
     // full-table mass (counters under addition are a monoid), so the bound
     // can never sit below the true rows.
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val root = queries.StatsStore.scratchRoot("graft_cnt_pin")
     val ev0 = Tables.events(s, dir)
     queries.StatsStore.buildTableStats(s, root, "events",
@@ -1453,8 +1410,7 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(pPos.contains("BroadcastHashJoin") && !pPos.contains("SortMergeJoin"),
       s"the counter mass did not price the flip:\n${pPos.take(2500)}")
     // negative: no stats → the filter-blind static estimate sort-merges
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     sNeg.conf.set("spark.sql.autoBroadcastJoinThreshold", "16384")
     val pNeg = q(sNeg).queryExecution.executedPlan.toString
     assert(pNeg.contains("SortMergeJoin"),
@@ -1491,8 +1447,7 @@ class PlanAuditSpec extends AnyFunSuite {
     }
     // with counters: the ~27-row slice joins first (both scans are
     // 'events', so the pin reads the FILTER on the bottom dim instead)
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val root = queries.StatsStore.scratchRoot("graft_cnt_reorder_pin")
     queries.StatsStore.buildTableStats(s, root, "events",
       Tables.events(s, dir), Seq("user_id"), Seq("event_id"))
@@ -1509,8 +1464,7 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(bottomIsSlice(joinsPos),
       s"counters did not commute the IN-filtered slice below the expansion: ${joinsPos.map(_.right.output.map(_.name))}")
     // same coverage WITHOUT counters → the IN stays unpriced, written order
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val rootNeg = queries.StatsStore.scratchRoot("graft_cnt_reorder_neg")
     queries.StatsStore.buildTableStats(sNeg, rootNeg, "events",
       Tables.events(sNeg, dir), Seq("user_id"))
@@ -1531,8 +1485,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // build→store→driver-side-hash pipeline in one assertion), and the
     // reorder must commute the 'error'-sliced dim below the expanding
     // full-events join only when the counters exist.
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val root = queries.StatsStore.scratchRoot("graft_streq_pin")
     queries.StatsStore.buildTableStats(s, root, "events",
       Tables.events(s, dir), Seq("user_id"), Nil, Seq("event_type"))
@@ -1561,8 +1514,7 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(bottomIsSlice(s),
       "string counters did not commute the sliced dim below the expansion")
     // same coverage WITHOUT the eqCols counters → written order
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val rootNeg = queries.StatsStore.scratchRoot("graft_streq_neg")
     queries.StatsStore.buildTableStats(sNeg, rootNeg, "events",
       Tables.events(sNeg, dir), Seq("user_id"))
@@ -1598,8 +1550,7 @@ class PlanAuditSpec extends AnyFunSuite {
       nat.join(if (hintMid) broadcast(mid) else mid,
         col("n_nationkey") === col("c_nationkey"))
     }
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     s.conf.set(graft.plans.SketchStats.DirKey,
       queries.StatsStore.ensureStatsFor(s, dir))
     val joins = tower(s, hintMid = false).queryExecution.optimizedPlan
@@ -1619,8 +1570,7 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(hinted.head.right.collectFirst { case j: LJoin => j }.nonEmpty,
       "a hinted composite side rotated — the hint lost its position")
     // written-order negative without stats
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val neg = tower(sNeg, hintMid = false).queryExecution.optimizedPlan
       .collect { case j: LJoin => j }
     assert(neg.head.right.collectFirst { case j: LJoin => j }.nonEmpty,
@@ -1658,8 +1608,7 @@ class PlanAuditSpec extends AnyFunSuite {
       finally s.sparkContext.removeSparkListener(l)
       n.get()
     }
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     graft.plans.RuleDiag.clear(s)
     s.conf.set(graft.plans.RuleDiag.EnabledKey, "true")
     s.conf.set(graft.plans.SketchStats.DirKey, queries.StatsStore.ensureStatsFor(s, dir))
@@ -1682,8 +1631,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // flip; broadcasting the PRESERVED side is not a hash-join shape at
     // all — the positive pins the first, the negative pins that the second
     // must NOT fire (and says why in the diagnostics).
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     graft.plans.RuleDiag.clear(s)
     s.conf.set(graft.plans.RuleDiag.EnabledKey, "true")
     s.conf.set(graft.plans.SketchStats.DirKey,
@@ -1735,8 +1683,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // VERDICT r16 item 1's minimal reorder half: the inner-below-outer
     // commute needs null-rejection analysis the rule does not implement,
     // so the shape stays put — but the operator now gets a reason.
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     graft.plans.RuleDiag.clear(s)
     s.conf.set(graft.plans.RuleDiag.EnabledKey, "true")
     s.conf.set(graft.plans.SketchStats.DirKey,
@@ -1773,8 +1720,7 @@ class PlanAuditSpec extends AnyFunSuite {
     }
     def topJoinType(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.optimizedPlan.collect { case j: LJoin => j }.head.joinType
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     graft.plans.RuleDiag.clear(s)
     s.conf.set(graft.plans.RuleDiag.EnabledKey, "true")
     val root = queries.StatsStore.scratchRoot("graft_oc_pin")
@@ -1790,8 +1736,7 @@ class PlanAuditSpec extends AnyFunSuite {
       s"missing the outer-commute fired record: $reasons")
     graft.plans.RuleDiag.clear(s)
     // negative: no stats — the inner join stays on top in written order
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     assert(topJoinType(chain(sNeg)) == CInner,
       "without stats the written order (inner on top) must hold")
     // the equivalence cannot change rows
@@ -1821,8 +1766,7 @@ class PlanAuditSpec extends AnyFunSuite {
         .join(hot1, col("o_custkey") === hot1("user_id"))
         .join(hot2, col("o_custkey") === hot2("user_id"))
     }
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val root = queries.StatsStore.scratchRoot("graft_oc_compose")
     queries.StatsStore.buildTableStats(s, root, "events",
       Tables.events(s, dir), Seq("user_id"), Seq("user_id"), Seq("event_type"))
@@ -1838,8 +1782,7 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(innersBelow.size == 2,
       s"both reducing inners should sit below the LEFT join, found ${innersBelow.size}")
     // equivalence against the unstatted written order
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     assert(chain(sNeg).queryExecution.optimizedPlan
       .collect { case j: LJoin => j }.head.joinType == CInner,
       "without stats the written order (inner on top) must hold")
@@ -1852,8 +1795,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // events file; the cents-lowered equi-depth boundaries price the tail
     // slice by bucket mass (literal lowered through the same
     // floor(x·100 + 0.5)) and the join flips at planning.
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val root = queries.StatsStore.scratchRoot("graft_cents_pin")
     queries.StatsStore.analyze(s, dir, root,
       Seq(("events", Seq("user_id")), ("orders", Seq("o_custkey"))),
@@ -1870,8 +1812,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val pPos = q(s).queryExecution.executedPlan.toString
     assert(pPos.contains("BroadcastHashJoin") && !pPos.contains("SortMergeJoin"),
       s"the cents histogram did not flip the double-range slice:\n${pPos.take(2500)}")
-    val sNeg = spark.newSession()
-    graft.plans.SketchStats.ensure(sNeg)
+    val sNeg = GraftPlanner.session(spark, GraftPlanner.Sketch)
     sNeg.conf.set("spark.sql.autoBroadcastJoinThreshold", "16384")
     val pNeg = q(sNeg).queryExecution.executedPlan.toString
     assert(pNeg.contains("SortMergeJoin"),
@@ -1888,8 +1829,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // estimate that can fall BELOW truth under staleness). The guard
     // compares the scan's current bytes against the recorded
     // table_src_bytes and refuses past the 25% slack.
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     val tdir = queries.StatsStore.scratchDir("graft_stale_tbl")
     val tbl = s"$tdir/events.parquet"
     Tables.events(s, dir)
@@ -1956,8 +1896,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // stats consumer. The right side of LeftSemi/LeftAnti is a buildable
     // hash-join side (the same `fits` bound applies unchanged); the LEFT
     // side is the output side and must never be hinted.
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     graft.plans.RuleDiag.clear(s)
     s.conf.set(graft.plans.RuleDiag.EnabledKey, "true")
     val root = queries.StatsStore.scratchRoot("graft_semi_pin")
@@ -2026,8 +1965,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // (semi output has no right-side columns — nothing to re-order the
     // right side against), and FullOuter is never a hash-join build on
     // either side; both shapes must say so instead of staying invisible.
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     graft.plans.RuleDiag.clear(s)
     s.conf.set(graft.plans.RuleDiag.EnabledKey, "true")
     s.conf.set(graft.plans.SketchStats.DirKey,
@@ -2078,8 +2016,7 @@ class PlanAuditSpec extends AnyFunSuite {
       df.queryExecution.optimizedPlan.collect {
         case j: LJoin if j.joinType.sql == "LEFT SEMI" => j
       }.exists(_.left.collectFirst { case a: LAgg => a }.nonEmpty)
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     s.conf.set(graft.plans.SketchStats.DirKey,
       queries.StatsStore.ensureStatsFor(s, dir))
     assert(partialBelowSemi(q(s)),
@@ -2101,8 +2038,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // estimate (testimony-when-present, the histogram cuts' posture) and
     // the chain degrades to written order — with the reason an operator
     // can act on (refresh the stats), not "unpriced".
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     graft.plans.RuleDiag.clear(s)
     s.conf.set(graft.plans.RuleDiag.EnabledKey, "true")
     val tdir = queries.StatsStore.scratchDir("graft_stale_reorder")

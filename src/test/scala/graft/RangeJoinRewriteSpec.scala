@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.RangeJoinRewrite
+import graft.plans.{GraftPlanner, RangeJoinRewrite}
 
 /** Equivalence property for the bucketed range-join rewrite: on random
   * point/interval frames (including empty, degenerate, negative, and
@@ -29,8 +29,7 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
         (a, b)
       }
       val sNaive = spark.newSession()
-      val sRule = spark.newSession()
-      RangeJoinRewrite.ensure(sRule)
+      val sRule = GraftPlanner.session(spark, GraftPlanner.RangeJoin)
       sRule.conf.set(RangeJoinRewrite.WidthKey, w.toString)
       def run(s: org.apache.spark.sql.SparkSession): Seq[(Long, Long, Long)] = {
         import s.implicits._
@@ -64,8 +63,7 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
         (a, a + span)
       }
       val sNaive = spark.newSession()
-      val sRule = spark.newSession()
-      RangeJoinRewrite.ensure(sRule)
+      val sRule = GraftPlanner.session(spark, GraftPlanner.RangeJoin)
       assert(sRule.conf.getOption(RangeJoinRewrite.WidthKey).isEmpty)
       def frames(s: org.apache.spark.sql.SparkSession) = {
         import s.implicits._
@@ -85,8 +83,7 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
   }
 
   test("explosion guard: a tiny manual width is raised so Sequence stays bounded") {
-    val sRule = spark.newSession()
-    RangeJoinRewrite.ensure(sRule)
+    val sRule = GraftPlanner.session(spark, GraftPlanner.RangeJoin)
     // manual W = 1 against a 10M-wide interval would explode to 10^7
     // Sequence elements per row without the guard (default cap 4096)
     sRule.conf.set(RangeJoinRewrite.WidthKey, "1")
@@ -102,8 +99,7 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
 
   test("TimestampType join fires without any hand micros cast and matches naive") {
     val sNaive = spark.newSession()
-    val sRule = spark.newSession()
-    RangeJoinRewrite.ensure(sRule)
+    val sRule = GraftPlanner.session(spark, GraftPlanner.RangeJoin)
     val rnd = new scala.util.Random(42L)
     val base = 1700000000000000L // epoch micros
     val pts = Seq.fill(50)(base + (rnd.nextLong() % 86400000000L).abs)
@@ -127,8 +123,7 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
 
   test("TIMESTAMP_NTZ join fires (internal-micros lowering) and matches naive") {
     val sNaive = spark.newSession()
-    val sRule = spark.newSession()
-    RangeJoinRewrite.ensure(sRule)
+    val sRule = GraftPlanner.session(spark, GraftPlanner.RangeJoin)
     val rnd = new scala.util.Random(7L)
     val base = 1700000000000000L
     val pts = Seq.fill(50)(base + (rnd.nextLong() % 86400000000L).abs)
@@ -159,8 +154,7 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
     // row (null-extended interval side). Soundness hinges on the preserved
     // side being the point side — each unmatched point null-extends once.
     val sNaive = spark.newSession()
-    val sRule = spark.newSession()
-    RangeJoinRewrite.ensure(sRule)
+    val sRule = GraftPlanner.session(spark, GraftPlanner.RangeJoin)
     val pts = Seq(5L, 15L, 42L, 77L, 120L, 999L)
     val ivs = Seq((0L, 20L), (30L, 50L), (70L, 80L), (100L, 101L), (40L, 45L))
     def run(s: org.apache.spark.sql.SparkSession, pin: Boolean): Seq[(Long, Option[Long], Option[Long])] = {
@@ -183,8 +177,7 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
     // the exploded side must be the non-preserved one — a preserved
     // interval row would null-extend once per bucket; the rule must leave
     // this shape to the naive join.
-    val sRule = spark.newSession()
-    RangeJoinRewrite.ensure(sRule)
+    val sRule = GraftPlanner.session(spark, GraftPlanner.RangeJoin)
     import sRule.implicits._
     val j = Seq(5L, 999L).toDF("t").join(
       Seq((0L, 20L), (30L, 50L)).toDF("lo", "hi"),
@@ -211,8 +204,7 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
       finally s.sparkContext.removeSparkListener(l)
       n.get()
     }
-    val s = spark.newSession()
-    RangeJoinRewrite.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.RangeJoin)
     import s.implicits._
     val scratch = queries.StatsStore.scratchDir("graft_ts_span")
     // a ts-typed validity table with genuinely varying spans
@@ -269,8 +261,7 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
     // width → inner join stays naive inside the probe plan) instead of
     // relying on plan shapes to terminate the recursion.
     val sNaive = spark.newSession()
-    val sRule = spark.newSession()
-    RangeJoinRewrite.ensure(sRule)
+    val sRule = GraftPlanner.session(spark, GraftPlanner.RangeJoin)
     val ptsA = Seq(5L, 15L, 42L, 77L, 120L)
     val ptsB = Seq(10L, 40L, 75L)
     val ivsB = Seq((0L, 20L), (30L, 50L), (70L, 80L), (100L, 101L))

@@ -6,6 +6,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GraftFunctions
+import graft.plans.GraftPlanner
 
 /** The HTTP query endpoint driven over a real loopback socket (the same
   * no-egress discipline as IngestSpec): SQL text in, JSONL out, capped
@@ -79,8 +80,7 @@ class ServeSpec extends AnyFunSuite {
     // talking to Serve — enable → query → read, all over HTTP. The serving
     // session has the rules but NO stats dir, so the planned join must
     // surface the no-stats-dir bail through GET /diag.
-    val s = spark.newSession()
-    graft.plans.SketchStats.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.Sketch)
     graft.plans.RuleDiag.clear(s)
     s.conf.set(graft.plans.RuleDiag.EnabledKey, "true")
     Tables.orders(s, SparkTestHarness.Sf0001).createOrReplaceTempView("v_diag_o")

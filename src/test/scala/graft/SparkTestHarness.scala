@@ -3,26 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (Spark boot is ~5 s; suites
-  * reuse it). Mirrors the Verify/Bench session configs exactly.
+  * reuse it), built by the same factory as Verify and Bench.
   */
 object SparkTestHarness {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // continuous assurance for the partitioning-claim contract: every
-      // claimed checkpoint cut ANY suite drives re-hashes a per-partition
-      // sample through the claim's own partitionIdExpression (ADVICE r12)
-      // — an unsound claim fails its suite loudly instead of mis-joining
-      .config("graft.checkpoint.validateClaim", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.create(cores = 4, extra = Seq(
+    // every claimed checkpoint cut any suite drives re-hashes a
+    // per-partition sample through the claim's own partitionIdExpression,
+    // so an unsound partitioning claim fails its suite instead of mis-joining
+    "graft.checkpoint.validateClaim" -> "true"))
   val Sf0001 = "/root/testdata/sf0.001"
 }

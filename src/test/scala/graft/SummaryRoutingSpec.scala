@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.SummaryRouting
+import graft.plans.{GraftPlanner, SummaryRouting}
 
 /** The materialized-summary optimizer rule: covered aggregates must read
   * the registered rollup (not the base relation), uncovered shapes must
@@ -109,8 +109,7 @@ class SummaryRoutingSpec extends AnyFunSuite {
   test("join elimination: the right-side-referenced near-miss is recorded; clean shapes are eliminated") {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin}
-    val s = spark.newSession()
-    graft.plans.JoinElimination.ensure(s)
+    val s = GraftPlanner.session(spark, GraftPlanner.JoinElim)
     graft.plans.RuleDiag.clear(s)
     s.conf.set(graft.plans.RuleDiag.EnabledKey, "true")
     try {
